@@ -9,13 +9,23 @@ map plus per-table normalization (the one real fix-up: events.ts is stored as
 parquet TIMESTAMP(NANOS), which Spark reads as long only under
 ``nanosAsLong`` — we convert back to a proper timestamp here, truncating to
 microseconds exactly like DuckDB/Presto do).
+
+Like the crawler, the catalog infers a table's schema once: load_table
+memoizes the schema Spark inferred on a single-file table's first read, and
+later reads pass it back so they start no Spark job (see "schema memo"
+below). An entry is keyed by the file's (path, mtime, size) and the session
+confs that change an inferred parquet schema, so a rewritten file or a
+changed conf is inferred afresh.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 # the driver-generated star schema (TESTDATA.md)
 TABLES = (
@@ -64,7 +74,10 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 # load_table add one round-robin repartition after the scan (deterministic:
 # sort-before-repartition is on by default, SPARK-23207). Tiny
 # broadcast-sized tables (< _SPREAD_MIN_BYTES) are never spread -- fanning
-# 25 nation rows over 32 tasks only adds scheduling overhead.
+# 25 nation rows over 32 tasks only adds scheduling overhead. The layout
+# (row groups, bytes, rows) is read from the parquet footer once per file
+# version and kept in the schema memo below, under the same
+# (path, mtime, size, confs) key as the memoized schema.
 #
 # Dial: SPARK_GRAFT_SCAN_SPREAD=off disables; =<int> forces that partition
 # count; unset/auto = min(cores, row-count-derived cap) as described.
@@ -87,34 +100,70 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 # ``load_table(..., spread=True)``.
 _SPREAD_SAFE_TABLES = frozenset({"documents", "embeddings"})
 _SPREAD_MIN_BYTES = 64 * 1024
-_LAYOUT_CACHE: dict[str, tuple[int, int, int]] = {}  # path -> (row_groups, bytes, rows)
 
 
-def _scan_layout(path: str) -> tuple[int, int, int]:
-    """(row_groups, file_bytes, rows) of a single-file parquet table;
-    (1 << 30,) * 3 when metadata can't be read (never spread on doubt)."""
-    hit = _LAYOUT_CACHE.get(path)
-    if hit is not None:
-        return hit
+# ---- schema memo (the crawler's infer-once) -------------------------------
+#
+# spark.read.parquet(path) starts one parquet-footer schema-inference Spark
+# job per call, and register_views reads all 10 tables on every SQL query,
+# so most of an interactive query's wall was re-inferring schemas that had
+# not changed. _MEMO keeps, per single-file table, the schema Spark itself
+# inferred on the first read (as JSON) and the file's scan layout
+# (row_groups, bytes, rows) that the spread above is gated on; a hit reads
+# with spark.read.schema(memoized), which starts no job. An entry is valid
+# only for the same file version, (st_mtime_ns, st_size), and the same
+# values of _SCHEMA_CONFS, the session confs that change what Spark infers
+# for a parquet file; anything else re-infers and replaces the entry.
+# Directory tables, and files whose footer pyarrow cannot read, are never
+# memoized: they are read exactly as before, with the layout unknown.
+# Pipeline tasks call load_table from several threads; the stamp is taken
+# before the read and an entry is stored whole, so a race costs at most
+# one extra inference, never a schema served for the wrong file version.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_UNKNOWN_LAYOUT = (1 << 30, 1 << 30, 1 << 30)  # never spread on doubt
+# path -> (validity key, schema JSON, (row_groups, bytes, rows))
+_MEMO: dict[str, tuple[tuple, str, tuple[int, int, int]]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, tuple[int, int, int]]:
+    """``spark.read.parquet(path)`` and the file's (row_groups, bytes, rows)
+    layout, through the schema memo."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path), _UNKNOWN_LAYOUT
+    key = (st.st_mtime_ns, st.st_size, *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    hit = _MEMO.get(path)
+    if hit is not None and hit[0] == key:
+        schema = StructType.fromJson(json.loads(hit[1]))
+        return spark.read.schema(schema).parquet(path), hit[2]
+    df = spark.read.parquet(path)
     try:
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
-        out = (md.num_row_groups, os.path.getsize(path), md.num_rows)
-    except Exception:  # directory tables / remote stores: layout unknown
-        out = (1 << 30, 1 << 30, 1 << 30)
-    _LAYOUT_CACHE[path] = out
-    return out
+    except (OSError, ValueError):  # unreadable footer: layout unknown, no entry
+        return df, _UNKNOWN_LAYOUT
+    layout = (md.num_row_groups, st.st_size, md.num_rows)
+    _MEMO[path] = (key, df.schema.json(), layout)
+    return df, layout
 
 
-def _spread_partitions(spark: SparkSession, path: str) -> int:
-    """How many partitions load_table should spread this scan over;
-    0 = leave the scan alone (layout already parallel enough, table tiny,
-    or the dial is off)."""
+def _spread_partitions(spark: SparkSession, layout: tuple[int, int, int]) -> int:
+    """How many partitions load_table should spread a scan with this
+    (row_groups, bytes, rows) layout over; 0 = leave the scan alone (layout
+    already parallel enough, table tiny, or the dial is off)."""
     dial = os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "auto").strip().lower()
     if dial in ("off", "0", "false", "no"):
         return 0
-    row_groups, nbytes, rows = _scan_layout(path)
+    row_groups, nbytes, rows = layout
     cores = spark.sparkContext.defaultParallelism
     if dial not in ("", "auto"):
         n = int(dial)
@@ -136,10 +185,9 @@ def load_table(
     ``spread``: None = spread only _SPREAD_SAFE_TABLES (see the correctness
     note above); True/False force it for one call site."""
     _ensure_session_confs(spark)
-    path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
+    df, layout = _read_parquet(spark, table_path(sf_dir, name))
     do_spread = name in _SPREAD_SAFE_TABLES if spread is None else spread
-    n_spread = _spread_partitions(spark, path) if do_spread else 0
+    n_spread = _spread_partitions(spark, layout) if do_spread else 0
     if n_spread:
         df = df.repartition(n_spread)
     if name == "events":

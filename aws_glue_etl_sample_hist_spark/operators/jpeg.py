@@ -112,16 +112,31 @@ def _scaled_quant(table: np.ndarray, quality: int) -> np.ndarray:
 # these were ~10% of per-tile encode time in the batch profile)
 _DC_CODES = _huffman_codes(DC_BITS, DC_VALS)
 _AC_CODES = _huffman_codes(AC_BITS, AC_VALS)
-# quality-scaled quant tables, keyed by quality (callers use one quality
-# for a whole corpus pass)
-_SCALED_QUANT_CACHE: dict[tuple[int, int], np.ndarray] = {}
+# entries kept per memo below: a corpus pass uses one quality and one
+# canonical table set, so a handful of entries is the working set
+_MEMO_CAP = 64
+
+
+def _memo_put(memo: dict, key, value):
+    """``memo.setdefault`` with a size cap: a full memo is emptied first, so
+    a stream of distinct keys (many qualities, foreign DHT tables) cannot
+    grow it without bound."""
+    if len(memo) >= _MEMO_CAP:
+        memo.clear()
+    return memo.setdefault(key, value)
+
+
+# quality-scaled quant tables, keyed by the base table's bytes and the
+# quality (callers use one quality for a whole corpus pass); the bytes, not
+# id(table), so a freed table's recycled id can never alias another table
+_SCALED_QUANT_CACHE: dict[tuple[bytes, int], np.ndarray] = {}
 
 
 def _scaled_quant_cached(table: np.ndarray, quality: int) -> np.ndarray:
-    key = (id(table), int(quality))
+    key = (table.tobytes(), int(quality))
     got = _SCALED_QUANT_CACHE.get(key)
     if got is None:
-        got = _SCALED_QUANT_CACHE.setdefault(key, _scaled_quant(table, quality))
+        got = _memo_put(_SCALED_QUANT_CACHE, key, _scaled_quant(table, quality))
     return got
 
 
@@ -323,8 +338,8 @@ class _HuffTable:
 
 
 # decoded _HuffTable structures memoized by the DHT segment's raw bytes
-# (guide §4.5); bounded by the number of DISTINCT table definitions a task
-# ever sees (one canonical set for this encoder)
+# (guide §4.5); capped at _MEMO_CAP distinct table definitions (one
+# canonical set for this encoder)
 _DHT_CACHE: dict[bytes, _HuffTable] = {}
 
 
@@ -396,7 +411,8 @@ def decode_jpeg(payload: bytes):
                 table = _DHT_CACHE.get(seg)
                 if table is None:
                     vals = list(data[at + 17 : at + 17 + nv])
-                    table = _DHT_CACHE.setdefault(
+                    table = _memo_put(
+                        _DHT_CACHE,
                         seg,
                         _HuffTable(
                             {

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..functions.datetime_fns import day_name, presto_day_of_week, with_date_parts, ymd
@@ -31,6 +31,40 @@ PARTITION_COLS = ["purchase_year", "purchase_month"]
 DIMS = ("part", "customer", "nation", "region", "supplier")
 
 
+def _month_parts() -> tuple[Column, Column]:
+    """The (year, month) partition values in the string form bronze derives
+    ('2014', '07'). Spark reads Hive partition columns back as ints (7), so
+    the month is zero-padded from either type."""
+    return (
+        F.col("purchase_year").cast("string"),
+        F.lpad(F.col("purchase_month").cast("string"), 2, "0"),
+    )
+
+
+def _yyyymm() -> Column:
+    """A row's 'yyyymm' month key, the form ``months`` is given in (a bare
+    concat of read-back ints gives '20147' for '201407')."""
+    return F.concat(*_month_parts())
+
+
+def _read_tier(spark: SparkSession, path: str, months: list[str] | None = None) -> DataFrame:
+    """Read a month-partitioned tier; ``months`` keeps only those months
+    (the filter references partition columns only, so it prunes at the
+    scan)."""
+    df = spark.read.parquet(path)
+    return df.filter(_yyyymm().isin(months)) if months else df
+
+
+def _with_string_partitions(df: DataFrame) -> DataFrame:
+    """``df`` with bronze's string partition values, so silver and gold
+    write the same zero-padded ``purchase_month=07`` dirs as bronze (a
+    read-back int writes ``purchase_month=7``). Applied right before a
+    write: strings carried through the joins and mart aggregations slowed
+    the build measurably."""
+    year, month = _month_parts()
+    return df.withColumns({"purchase_year": year, "purchase_month": month})
+
+
 def bronze_fact(spark: SparkSession, sf_dir: str, out_dir: str, months: list[str] | None = None) -> None:
     """T0 fact ingest (reference jb_de_enhancement_t0_fact_d2s.py): date-bounded
     extract with substring-derived partition columns, written Hive-partitioned.
@@ -39,7 +73,7 @@ def bronze_fact(spark: SparkSession, sf_dir: str, out_dir: str, months: list[str
         load_table(spark, sf_dir, "lineitem").withColumn("purchase_date", ymd("l_shipdate"))
     )
     if months:
-        li = li.filter(F.concat("purchase_year", "purchase_month").isin(months))
+        li = li.filter(_yyyymm().isin(months))
     # cluster by the Hive partition key before the partitioned write (r14,
     # guide §6): unclustered, every scan task writes a file into every month
     # directory (tasks x months small files -- and with the single-file
@@ -104,9 +138,7 @@ def silver_join(spark: SparkSession, out_dir: str, months: list[str] | None = No
     pruning applies on incremental runs (the reference's push_down_predicate).
     The fact-to-fact bridge is a shuffle join here; the bucketed variant
     below removes that shuffle entirely."""
-    fact = spark.read.parquet(os.path.join(out_dir, "bronze", "purchase"))
-    if months:
-        fact = fact.filter(F.concat("purchase_year", "purchase_month").isin(months))
+    fact = _read_tier(spark, os.path.join(out_dir, "bronze", "purchase"), months)
     dims = {n: spark.read.parquet(os.path.join(out_dir, "bronze", n)) for n in DIMS}
     orders = spark.read.parquet(os.path.join(out_dir, "bronze", "orders"))
     wide = _silver_wide(fact, orders, dims)
@@ -115,7 +147,7 @@ def silver_join(spark: SparkSession, out_dir: str, months: list[str] | None = No
     # would otherwise write a small file into every month directory
     wide = wide.repartition(*PARTITION_COLS)
     write_partitioned(
-        wide, os.path.join(out_dir, "silver", "purchase_all_info"),
+        _with_string_partitions(wide), os.path.join(out_dir, "silver", "purchase_all_info"),
         partition_by=PARTITION_COLS, policy=FACT_POLICY,
     )
 
@@ -141,7 +173,7 @@ def bronze_fact_bucketed(
         load_table(spark, sf_dir, "lineitem").withColumn("purchase_date", ymd("l_shipdate"))
     )
     if months:
-        li = li.filter(F.concat("purchase_year", "purchase_month").isin(months))
+        li = li.filter(_yyyymm().isin(months))
     write_bucketed_table(
         li, FACT_BKT_TABLE, os.path.join(out_dir, "bronze", "purchase_bkt"),
         bucket_cols=["l_orderkey"], n_buckets=N_BUCKETS, sort_cols=["l_orderkey"],
@@ -223,10 +255,7 @@ def silver_join_bucketed(
 def _read_silver(
     spark: SparkSession, out_dir: str, months: list[str] | None = None
 ) -> DataFrame:
-    silver = spark.read.parquet(os.path.join(out_dir, "silver", "purchase_all_info"))
-    if months:
-        silver = silver.filter(F.concat("purchase_year", "purchase_month").isin(months))
-    return silver
+    return _read_tier(spark, os.path.join(out_dir, "silver", "purchase_all_info"), months)
 
 
 def _write_mart(df: DataFrame, out_dir: str, name: str) -> None:
@@ -237,7 +266,7 @@ def _write_mart(df: DataFrame, out_dir: str, name: str) -> None:
     month-pruned silver is exact, and a nightly run aggregates one month of
     silver instead of the whole table."""
     write_partitioned(
-        df, os.path.join(out_dir, "gold", name),
+        _with_string_partitions(df), os.path.join(out_dir, "gold", name),
         partition_by=PARTITION_COLS, policy=MART_POLICY,
     )
 

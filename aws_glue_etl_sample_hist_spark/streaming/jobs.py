@@ -863,7 +863,9 @@ def _stage_slices(df: DataFrame, slice_col, src_dir: str, n: int = 3) -> None:
     exactly n micro-batches; the k=v partition dirs are renamed to the
     readers' s0..s{n-1} layout (a filesystem move, no data pass). The
     partition column is synthetic and dropped by partitionBy, so the
-    staged files carry exactly the input schema."""
+    staged files carry exactly the input schema. A slice with no rows gets
+    no partition dir from the write, so its reader dir is created empty:
+    all n s{i} dirs always exist."""
     (
         df.withColumn("_slice", slice_col.cast("int"))
         .repartition(n, "_slice")
@@ -872,9 +874,12 @@ def _stage_slices(df: DataFrame, slice_col, src_dir: str, n: int = 3) -> None:
         .parquet(src_dir)
     )
     for s in range(n):
-        os.rename(
-            os.path.join(src_dir, f"_slice={s}"), os.path.join(src_dir, f"s{s}")
-        )
+        written = os.path.join(src_dir, f"_slice={s}")
+        reader = os.path.join(src_dir, f"s{s}")
+        if os.path.isdir(written):
+            os.rename(written, reader)
+        else:
+            os.mkdir(reader)
 
 
 def _local_cluster_merge(

@@ -624,6 +624,9 @@ def main() -> None:
         # runs -- tools/bench_ratio_compare.py consumes both
         "jobs": jobs,
         "sf": _sf_from_dir(sf_dir),
+        # the session's core count, so a record from a smaller host can
+        # never pass as the gated record taken at a larger one
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     # ---- closing-artifact probe gate (VERDICT r12 item 7) ----
     # r12 shipped a closing bench_result.json from a box whose probes
@@ -701,7 +704,7 @@ def main() -> None:
     )
     while True:
         line["queries"] = kept
-        # job counts ride the driver line as INTS for the 12 slowest kept
+        # job counts ride the stdout line as INTS for the 10 slowest kept
         # rows at >= 2 s only (VERDICT r14 item 2: the full-float
         # all-rows jobs dict ate the line budget and halved the kept rows
         # to 23 -- the kept-ROW count now has priority over jobs

@@ -4,6 +4,7 @@ SURVEY.md §5 'pipeline tests')."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -66,42 +67,59 @@ def test_full_rerun_is_idempotent(spark, sf_small, pipeline_out):
     assert silver.count() == sum(before.values())
 
 
+def _part_dir(tier_path, month):
+    """A month's partition dir: every tier writes zero-padded month dirs."""
+    return os.path.join(
+        tier_path, f"purchase_year={month[0]}", f"purchase_month={month[1]:02d}"
+    )
+
+
+def _parquet_mtimes(path):
+    return [os.stat(f).st_mtime_ns for f in glob.glob(os.path.join(path, "*.parquet"))]
+
+
 def test_incremental_month_overwrites_only_that_partition(spark, sf_small, pipeline_out):
     out, _ = pipeline_out
     bronze_path = os.path.join(out, "bronze", "purchase")
+    silver_path = os.path.join(out, "silver", "purchase_all_info")
+    mart_dir = os.path.join(out, "gold", "mart_salesbybrandtype")
     before = _counts_by_month(spark, bronze_path)
-    month = sorted(before)[0]
+    # a single-digit month: read back from the partition dirs it is the int
+    # 7, and only a zero-padded key matches the '199607' the caller passes
+    month = min(m for m in before if m[1] < 10)
+    yyyymm = f"{month[0]}{month[1]:02d}"
+    mart_before = _counts_by_month(spark, mart_dir)
+    written_before = {
+        path: max(_parquet_mtimes(_part_dir(path, month)))
+        for path in (silver_path, mart_dir)
+    }
     # write a marker file inside a DIFFERENT month's partition dir; dynamic
     # overwrite of `month` must not touch it
     other = sorted(before)[-1]
-    other_dir = os.path.join(
-        bronze_path, f"purchase_year={other[0]}", f"purchase_month={other[1]}"
-    )
-    marker = os.path.join(other_dir, "_marker")
+    marker = os.path.join(_part_dir(bronze_path, other), "_marker")
     with open(marker, "w") as f:
         f.write("x")
 
-    run_medallion(spark, sf_small, out, months=[month[0] + month[1]])
+    run_medallion(spark, sf_small, out, months=[yyyymm])
 
     after = _counts_by_month(spark, bronze_path)
     assert after == before  # same data: overwrite replaced like-for-like
     assert os.path.exists(marker)  # untouched partition dir survived
     os.remove(marker)
+    # the reload really rewrote the month's silver and mart partitions
+    for path, last_write in written_before.items():
+        rewritten = _parquet_mtimes(_part_dir(path, month))
+        assert rewritten and min(rewritten) > last_write, path
     # silver only rewrote the incremental month too
-    silver_after = _counts_by_month(
-        spark, os.path.join(out, "silver", "purchase_all_info")
-    )
-    assert silver_after == before
+    assert _counts_by_month(spark, silver_path) == before
+    assert _counts_by_month(spark, mart_dir) == mart_before
     # gold marts are month-partitioned as well: the incremental run replaced
     # ONLY the target month's mart partitions (marker in another month's dir
     # survives) -- incremental materialized-view maintenance
-    mart_dir = os.path.join(out, "gold", "mart_salesbybrandtype")
-    mart_marker = os.path.join(
-        mart_dir, f"purchase_year={other[0]}", f"purchase_month={other[1]}", "_m"
-    )
+    mart_marker = os.path.join(_part_dir(mart_dir, other), "_m")
     with open(mart_marker, "w") as f:
         f.write("x")
-    run_medallion(spark, sf_small, out, months=[month[0] + month[1]])
+    run_medallion(spark, sf_small, out, months=[yyyymm])
     assert os.path.exists(mart_marker)
     os.remove(mart_marker)
     mart_months = {
@@ -183,8 +201,6 @@ def test_bucketed_medallion_matches_and_t1_join_is_shuffle_free(
         # (>1 file in that month's partition directory) -- the 100x-scale
         # behavior, exercised by shrinking the target instead of the data --
         # and the silver rows must be byte-identical to the single-slice run
-        import glob
-
         from aws_glue_etl_sample_hist_spark.plans.medallion import (
             PARTITION_COLS,
             silver_join_bucketed,

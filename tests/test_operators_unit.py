@@ -1711,6 +1711,33 @@ def test_jpeg_roundtrip_error_bounds():
     assert decg.shape == (24, 17, 3)  # grey replicates to 3 channels
 
 
+def test_jpeg_table_memos_key_by_content_and_stay_capped():
+    """The quant-table memo is keyed by the table's bytes, not its id(): an
+    equal table built elsewhere hits the same entry, a different table with
+    a recycled id cannot alias it; both memos stay within their cap."""
+    import numpy as np
+
+    from aws_glue_etl_sample_hist_spark.operators import jpeg
+
+    a = jpeg._scaled_quant_cached(jpeg.LUM_QUANT.copy(), 75)
+    assert jpeg._scaled_quant_cached(jpeg.LUM_QUANT.copy(), 75) is a
+    assert (a == jpeg._scaled_quant(jpeg.LUM_QUANT, 75)).all()
+    other = jpeg._scaled_quant_cached(jpeg.CHROMA_QUANT.copy(), 75)
+    assert (other == jpeg._scaled_quant(jpeg.CHROMA_QUANT, 75)).all()
+
+    for q in range(1, 101):
+        jpeg._scaled_quant_cached(jpeg.LUM_QUANT, q)
+        jpeg._scaled_quant_cached(jpeg.CHROMA_QUANT, q)
+        assert len(jpeg._SCALED_QUANT_CACHE) <= jpeg._MEMO_CAP
+    # the DHT memo shares the cap
+    for i in range(jpeg._MEMO_CAP + 5):
+        jpeg._memo_put(jpeg._DHT_CACHE, b"dht%d" % i, None)
+        assert len(jpeg._DHT_CACHE) <= jpeg._MEMO_CAP
+    jpeg._DHT_CACHE.clear()
+    img = np.full((8, 8, 3), 9, np.uint8)
+    assert (jpeg.decode_jpeg(jpeg.encode_jpeg(img, quality=95)) == img).all()
+
+
 def test_jpeg_rejects_out_of_scope_streams():
     import struct
 

@@ -228,3 +228,22 @@ def test_stream_dedup_local_merge_paths_agree(spark, sf_small, monkeypatch):
     monkeypatch.setattr(sj, "_local_cluster_merge", trip_after_first)
     assert run() == want
     assert calls["n"] == 2  # batch 1 tripped; batch 2 never re-probed
+
+
+def test_stage_slices_creates_a_reader_dir_for_an_empty_slice(spark, tmp_path):
+    """A slice value with no rows gets no partition dir from the write; the
+    drain readers still need all n s{i} dirs, the empty one included."""
+    from pyspark.sql import functions as F
+
+    from aws_glue_etl_sample_hist_spark.streaming.jobs import _stage_slices
+
+    src = str(tmp_path / "src")
+    df = spark.range(30).withColumn("v", F.col("id") * 2)
+    # slice 1 gets no rows: every id maps to slice 0 or 2
+    _stage_slices(df, F.when(F.col("id") % 2 == 0, 0).otherwise(2), src, n=3)
+    for s in range(3):
+        assert os.path.isdir(os.path.join(src, f"s{s}"))
+    assert not any(n.startswith("_slice=") for n in os.listdir(src))
+    assert spark.read.parquet(os.path.join(src, "s0")).count() == 15
+    assert spark.read.parquet(os.path.join(src, "s2")).count() == 15
+    assert os.listdir(os.path.join(src, "s1")) == []
